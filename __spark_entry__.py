@@ -127,54 +127,6 @@ def _parquet_row_count(path: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-def _literal_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Driver-literal frame compiled to ONE parsed SQL expression —
-    a pure-JVM ``inline(array(named_struct(...)))`` over a 1-split
-    range, zero Python-worker tasks.
-
-    ``createDataFrame(list)`` parallelizes the rows, so every
-    downstream action schedules a Python-worker round trip (~250 ms
-    of protocol latency per task on this host class, measured warm).
-    Gate/summary frames are driver-known literals, so the Python hop
-    is pure waste. Values stay bit-identical: ints/longs are SQL
-    integer literals, doubles route through ``CAST('<repr>' AS
-    DOUBLE)`` (Python repr round-trips doubles exactly; the cast is
-    correctly rounded), strings are backslash-then-quote escaped.
-
-    ``schema`` is the same "name type, ..." string createDataFrame
-    took; supported types: int, long/bigint, double, float, string,
-    boolean.
-    """
-    if not rows:
-        return spark.createDataFrame(rows, schema)
-    fields = []
-    for part in schema.split(","):
-        name, typ = part.strip().split(None, 1)
-        fields.append((name, typ.strip().upper()))
-
-    def lit(v, typ: str) -> str:
-        if v is None:
-            return f"CAST(NULL AS {typ})"
-        if typ in ("DOUBLE", "FLOAT"):
-            return f"CAST('{float(v)!r}' AS {typ})"
-        if typ == "BOOLEAN":
-            return "TRUE" if v else "FALSE"
-        if typ == "STRING":
-            s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{s}'"
-        return f"CAST({int(v)} AS {typ})"
-
-    structs = ", ".join(
-        "named_struct("
-        + ", ".join(f"'{n}', {lit(v, t)}" for (n, t), v in zip(fields, row))
-        + ")"
-        for row in rows
-    )
-    return spark.range(0, 1, 1, 1).select(
-        F.expr(f"inline(array({structs}))")
-    )
-
-
 _EVENTS_SCHEMA = (
     "event_id bigint, ts bigint, user_id bigint, "
     "event_type string, value double, props string"
@@ -1471,7 +1423,7 @@ def drift_js_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         e12(F.col("js_contrib")).alias("js_e12"),
         F.lit(None).cast("long").alias("js_total_e6"),
     )
-    tot_row = _literal_df(
+    tot_row = values_df(
         spark,
         [("total", None, None, None, None,
           int(_math.floor(total * 1e6 + 0.5)))],
@@ -1964,7 +1916,7 @@ def j_crossdomain_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     there are zero violations) while the oracle's global aggregate
     always yields one row — caught by the sf0.1 oracle sweep, r7."""
     j3 = j3_rsubjid_in_dm(spark, sf_dir)
-    j3_default = _literal_df(
+    j3_default = values_df(
         spark,
         [("RELSUB", "RSUBJID", "CrossReference", "Error", 0, None)],
         "domain string, variable string, category string, severity string, "
@@ -3120,7 +3072,7 @@ def table_merge_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, root, base, current_version(root), "event_id"
     )
     st = m["metadata"]["merge"]
-    return _literal_df(
+    return values_df(
         spark,
         [
             (
@@ -3231,7 +3183,7 @@ def rollup_refresh_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     st = rollup_status(roll)
     au = m["metadata"]["rollup"]
-    return _literal_df(
+    return values_df(
         spark,
         [(au["files_added"], au["files_removed"], st["base_version"])],
         "files_added int, files_removed int, base_version int",
@@ -3295,7 +3247,7 @@ def ivf_retrain_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
         _IVF_RETRAIN_BENCH_MEMO[sf_dir] = root
     m = retrain_ivf_store(spark, root)
     bal = ivf_cell_balance(spark, root)
-    return _literal_df(
+    return values_df(
         spark,
         [(m["version"], bal["n_rows"], float(bal["skew"]))],
         "version long, n_rows long, skew double",
@@ -3394,7 +3346,7 @@ def table_retention_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = m["metadata"].get("merge") or {
         "files_dropped": 0, "rows_dropped": 0, "rows_tombstoned": 0,
     }
-    return _literal_df(
+    return values_df(
         spark,
         [(st["files_dropped"], st["rows_dropped"], st["rows_tombstoned"])],
         "files_dropped int, rows_dropped long, rows_tombstoned long",
@@ -3450,7 +3402,7 @@ def table_retention_partitioned_bench(
     st = m["metadata"].get("merge") or {
         "files_dropped": 0, "files_scanned": 0, "rows_tombstoned": 0,
     }
-    return _literal_df(
+    return values_df(
         spark,
         [(st["files_dropped"], st["files_scanned"],
           st["rows_tombstoned"])],
@@ -3509,7 +3461,7 @@ def table_branch_publish_bench(
     delete_matching_dv(spark, branch, keys, "event_id", verify=False)
     m = publish_clone(spark, branch)
     au = m["metadata"]["publish_clone"]
-    return _literal_df(
+    return values_df(
         spark,
         [(au["files_added"], au["files_removed"],
           au["dv_files_changed"])],
@@ -3614,7 +3566,7 @@ def table_manifest_segment_bench(
             if k not in ("segments", "segment_stats", "dv_rows")
         })
     )
-    return _literal_df(
+    return values_df(
         spark,
         [(
             m["n_files"],
@@ -3681,7 +3633,7 @@ def table_version_diff_bench(
             "shared-segment skip is not engaging"
         )
     n_segs = len(segs_b)
-    return _literal_df(
+    return values_df(
         spark,
         [(
             d["n_added"],
@@ -3704,7 +3656,7 @@ def table_delete_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     root, keys = _delete_bench_next_keys(spark, sf_dir, "cow")
     m = delete_matching(spark, root, keys, "event_id", verify=False)
     st = m["metadata"]["merge"]
-    return _literal_df(
+    return values_df(
         spark,
         [(st["files_rewritten"], st["files_kept"])],
         "files_rewritten int, files_kept int",
@@ -3729,7 +3681,7 @@ def table_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = m["metadata"].get("merge") or {
         "rows_deleted": 0, "files_affected": 0, "files_rewritten": 0,
     }
-    return _literal_df(
+    return values_df(
         spark,
         [(st["rows_deleted"], st["files_affected"], st["files_rewritten"])],
         "rows_deleted long, files_affected int, files_rewritten int",
@@ -3832,7 +3784,7 @@ def quality_model_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra, NOT in the 50-slot contract; semantics pinned by
     tests/test_qualitymodel.py."""
     model = _train_qm(spark, sf_dir)
-    return _literal_df(
+    return values_df(
         spark,
         [(int(model.num_features), float(model.lr_model.intercept))],
         "num_features int, intercept double",

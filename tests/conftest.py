@@ -31,6 +31,8 @@ def rows(df, *cols):
 # The full suite (including slow) ran green at the start of r17:
 # 1016 passed, 1 skipped in 41m35s.
 
+import os
+
 import pytest as _pytest
 
 SLOW_TESTS = frozenset(
@@ -136,7 +138,22 @@ SLOW_TESTS = frozenset(
 
 
 def pytest_collection_modifyitems(config, items):
+    matched = set()
     for item in items:
-        base = item.name.split("[", 1)[0]
-        if (item.fspath.basename, base) in SLOW_TESTS:
+        key = (item.fspath.basename, item.name.split("[", 1)[0])
+        if key in SLOW_TESTS:
             item.add_marker(_pytest.mark.slow)
+            matched.add(key)
+    # drift check: a renamed or deleted slow test would silently move
+    # back into the default tier. Only files collected whole count —
+    # a file narrowed by node id (file.py::test) collects a subset.
+    narrowed = {
+        os.path.basename(a.split("::", 1)[0]) for a in config.args if "::" in a
+    }
+    whole = {item.fspath.basename for item in items} - narrowed
+    stale = sorted(e for e in SLOW_TESTS - matched if e[0] in whole)
+    if stale:
+        raise _pytest.UsageError(
+            "SLOW_TESTS entries match no collected test: "
+            + ", ".join("::".join(e) for e in stale)
+        )

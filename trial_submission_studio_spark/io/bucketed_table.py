@@ -319,29 +319,17 @@ def _point_lookup_plan(
     key = spec["key_cols"][0]
     # build the probe frame WITH the target key's exact type (an
     # int-keyed table must not see bigint-inferred scalars — F.hash
-    # is dtype-sensitive, and the caller has no DataFrame to cast)
-    from pyspark.sql.types import StructType
+    # is dtype-sensitive, and the caller has no DataFrame to cast).
+    # Literal VALUES relation: pure JVM, no Python-worker task.
+    from trial_submission_studio_spark.sources.local import values_df
 
     probe_schema = spark.read.parquet(
         os.path.join(root, m["files"][0])
     ).schema
-    key_field = next(f for f in probe_schema.fields if f.name == key)
-    if key_field.dataType.simpleString() in (
-        "int", "bigint", "smallint", "tinyint", "string", "double",
-        "float", "boolean",
-    ):
-        # literal VALUES relation: pure JVM, no Python-worker task
-        from trial_submission_studio_spark.sources.local import values_df
-
-        keys = values_df(
-            spark,
-            [(v,) for v in values],
-            f"{key} {key_field.dataType.simpleString()}",
-        )
-    else:
-        keys = spark.createDataFrame(
-            [(v,) for v in values], StructType([key_field])
-        )
+    key_type = probe_schema[key].dataType.simpleString()
+    keys = values_df(
+        spark, [(v,) for v in values], f"`{key.replace('`', '``')}` {key_type}"
+    )
     mine = bucket_files(m, probe_bucket_ids(keys, spec))
     audit = {"files_total": len(m["files"]),
              "files_after_bucket_prune": len(mine)}
@@ -470,10 +458,11 @@ def sync_catalog_bucketed(
         sort_cols=sort_within,
         path=path,
     )
-    esc_root = root_abs.replace("'", "''")
+    from trial_submission_studio_spark.sources.local import sql_string
+
     spark.sql(
         f"ALTER TABLE {table} SET TBLPROPERTIES ("
-        f"'tss.snapshot_root'='{esc_root}', "
+        f"'tss.snapshot_root'={sql_string(root_abs)}, "
         f"'tss.snapshot_version'='{cur}')"
     )
     return {"table": table, "version": cur, "refreshed": True}

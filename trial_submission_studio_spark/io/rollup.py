@@ -318,7 +318,9 @@ def refresh_rollup(
 def _retire_partials(
     spark: SparkSession, rollup_root: str, removed: list[str], rollup_meta: dict
 ) -> dict:
-    doomed = spark.createDataFrame([(f,) for f in removed], f"{_FILE} string")
+    from trial_submission_studio_spark.sources.local import values_df
+
+    doomed = values_df(spark, [(f,) for f in removed], f"{_FILE} string")
     clean = {k: v for k, v in rollup_meta.items() if k != "pending_removed"}
     return delete_matching(
         spark, rollup_root, doomed, _FILE, verify=False,

@@ -25,6 +25,7 @@ import math
 import struct
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 
 
@@ -203,9 +204,10 @@ def read_xpt(spark, path: str, blank_as_null: bool = True, batch_rows: int = 100
     fields = ", ".join(
         f"`{v.name}` {'double' if v.is_numeric else 'string'}" for v in variables
     )
-    empty = spark.createDataFrame([], fields)
     if n_rows == 0:
-        return empty
+        from trial_submission_studio_spark.sources.local import values_df
+
+        return values_df(spark, [], fields)
 
     def decode_batch(lo: int, hi: int) -> pd.DataFrame:
         m = np.frombuffer(
@@ -507,11 +509,18 @@ def write_xpt(
         except Exception:
             est_total = 0
 
+        def _public_fetch():
+            src_rdd = payload.rdd
+            return src_rdd.getNumPartitions(), lambda parts: sc.runJob(
+                src_rdd, lambda it: list(it), partitions=parts
+            )
+
+        # fast path: serve the pickled-Row JavaRDD directly
+        # (pyspark-internal helpers, stable across 3.x/4.x — but
+        # guarded so a relocation or a changed JVM signature degrades
+        # to the slower public path instead of failing mid-file)
+        fast_errors = (ImportError, AttributeError, Py4JError)
         try:
-            # fast path: serve the pickled-Row JavaRDD directly
-            # (pyspark-internal helpers, stable across 3.x/4.x — but
-            # guarded so a future relocation degrades to the slower
-            # public path instead of failing mid-file)
             from pyspark.rdd import _load_from_socket
             from pyspark.serializers import BatchedSerializer, CPickleSerializer
 
@@ -523,12 +532,10 @@ def write_xpt(
                 sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, parts)
                 return list(_load_from_socket(sock_info, _ser))
 
-        except ImportError:
-            src_rdd = payload.rdd
-            n_pp = src_rdd.getNumPartitions()
-
-            def _fetch(parts: list[int]) -> list:
-                return sc.runJob(src_rdd, lambda it: list(it), partitions=parts)
+            fast = True
+        except fast_errors:
+            n_pp, _fetch = _public_fetch()
+            fast = False
 
         if est_total > 0 and n_pp > 0:
             est_pp = max(est_total // n_pp, 1)
@@ -544,7 +551,17 @@ def write_xpt(
             else:
                 avg = max(fetched_bytes // fetched_parts, 1)
                 size = max(1, min(n_pp - lo, int(budget // avg)))
-            rows = _fetch(list(range(lo, lo + size)))
+            try:
+                rows = _fetch(list(range(lo, lo + size)))
+            except fast_errors as e:
+                # the first fetch runs before any OBS byte is written,
+                # so a fast path that fails there (not a failed job:
+                # Py4JJavaError) can still switch to the public one
+                if not fast or fetched_parts or isinstance(e, Py4JJavaError):
+                    raise
+                n_pp, _fetch = _public_fetch()
+                fast = False
+                rows = _fetch(list(range(lo, lo + size)))
             lo += size
             fetched_parts += size
             for prow in rows:

@@ -170,9 +170,11 @@ def collect_file_stats(
                     out.append((rel, _json.dumps(s)))
                 yield pd.DataFrame(out, columns=["rel", "stats"])
 
-        pdf = spark.createDataFrame(
-            [(f,) for f in files], "rel string"
-        ).repartition(min(len(files), 64))
+        from trial_submission_studio_spark.sources.local import values_df
+
+        pdf = values_df(spark, [(f,) for f in files], "rel string").repartition(
+            min(len(files), 64)
+        )
         rows = pdf.mapInPandas(_kernel, "rel string, stats string").collect()
         import json as _json
 

@@ -46,10 +46,8 @@ def _literal_codelist_entries(
     only on ASCII (SQL ``trim`` strips 0x20 only → ``strip(' ')``;
     ``upper`` maps a-z only), so any non-ASCII key/value falls back
     to the join, where Spark itself normalizes. Dedup keeps the first
-    occurrence — the frame path's ``dropDuplicates`` pick is
-    partition-order-arbitrary, so any catalog whose duplicate keys
-    disagree on the value was already nondeterministic; first-wins is
-    a deterministic member of that same behavior family.
+    occurrence; catalog lookups (standards/ct.py) are already deduped
+    first-wins on (codelist_code, lookup_key), so both paths agree.
     """
     rows = getattr(lookup_df, "_tss_local_rows", None)
     cols = getattr(lookup_df, "_tss_local_cols", None)

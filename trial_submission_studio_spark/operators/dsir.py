@@ -147,22 +147,13 @@ def dsir_log_weights(
     tgt_counts = hashed_ngram_counts(target, id_col, text_col, buckets, bucket_expr)
     log_t = fit_bucket_distribution(tgt_counts, buckets, smoothing)
     log_r = fit_bucket_distribution(raw_counts, buckets, smoothing)
-    # pandas + Arrow: the frame lands JVM-side as a LocalTableScan —
-    # a plain list createDataFrame parallelizes and pays a
-    # Python-worker task (~250 ms protocol latency) on every action
-    # that touches the broadcast build side
-    import pandas as _pd
+    # literal VALUES relation: lands JVM-side as a LocalTableScan, no
+    # Python-worker task on the actions that touch the build side
+    from trial_submission_studio_spark.sources.local import values_df
 
-    ratio = spark.createDataFrame(
-        _pd.DataFrame(
-            {
-                "bucket": _pd.Series(range(buckets), dtype="int64"),
-                "log_ratio": _pd.Series(
-                    [log_t[b] - log_r[b] for b in range(buckets)],
-                    dtype="float64",
-                ),
-            }
-        ),
+    ratio = values_df(
+        spark,
+        [(b, log_t[b] - log_r[b]) for b in range(buckets)],
         "bucket bigint, log_ratio double",
     )
     return (

@@ -342,7 +342,10 @@ def unigram_vocab_df(spark, model: dict) -> DataFrame:
     desc, piece asc), deterministic; persist beside the corpus like
     bpe_vocab."""
     items = sorted(model["logp"].items(), key=lambda t: (-t[1], t[0]))
-    return spark.createDataFrame(
+    from trial_submission_studio_spark.sources.local import values_df
+
+    return values_df(
+        spark,
         [(i, p, lp) for i, (p, lp) in enumerate(items)],
         "piece_id long, piece string, logprob double",
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trial_submission_studio_spark.functions.datetime_iso import ISO_PARTIAL_RE
+from trial_submission_studio_spark.sources.local import values_df
 
 ISSUE_SCHEMA = T.StructType(
     [
@@ -35,67 +36,14 @@ ISSUE_SCHEMA = T.StructType(
         T.StructField("samples", T.ArrayType(T.StringType())),
     ]
 )
+_ISSUE_DDL = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in ISSUE_SCHEMA)
 
 
 def _issue_frame(spark, rows):
-    """Driver-local issue frame, built WITHOUT any Python-worker task.
+    """Driver-local issue frame: a literal VALUES relation
+    (sources/local.py), zero Python-worker tasks."""
+    return values_df(spark, rows, _ISSUE_DDL)
 
-    r16 put the rows on ONE parallelize slice (one Python hop instead
-    of 32). r17 removes the hop entirely: on this class of host a
-    single Python-worker task costs ~150-300 ms of protocol latency
-    even with a warm reused worker (measured: 1-task pickle job 0.3 s,
-    JVM 1-row job 0.02 s), and an issue frame is collected once per
-    validation call. Issue rows are driver-known literals, so the
-    frame compiles to ``inline(array(struct(...)))`` over a 1-split
-    range — a pure-JVM LocalTableScan-shaped plan, zero Python tasks.
-    Content and column set are identical (pinned by the validate
-    tests and the v_domain_check_gates oracle). Very large row lists
-    (not a validation shape — reports are per-variable summaries)
-    fall back to the r16 path to keep plan size bounded.
-    """
-    rows = rows or []
-    if len(rows) > 200:
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), ISSUE_SCHEMA
-        )
-
-    # The whole frame is ONE parsed SQL expression (a single py4j
-    # round trip): the Column-API formulation cost ~100 ms of driver
-    # chatter per frame (~6 F.lit + casts + struct per row).
-    def _s(v) -> str:
-        if v is None:
-            return "CAST(NULL AS STRING)"
-        # Spark SQL string literals process backslash escapes, so
-        # escape the backslash itself first, then the quote
-        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    if not rows:
-        return spark.range(0, 0, 1, 1).selectExpr(
-            "CAST(NULL AS STRING) AS domain",
-            "CAST(NULL AS STRING) AS variable",
-            "CAST(NULL AS STRING) AS category",
-            "CAST(NULL AS STRING) AS severity",
-            "CAST(NULL AS BIGINT) AS count",
-            "CAST(NULL AS ARRAY<STRING>) AS samples",
-        )
-    structs = []
-    for r in rows:
-        cnt = "CAST(NULL AS BIGINT)" if r[4] is None else f"CAST({int(r[4])} AS BIGINT)"
-        if r[5] is None:
-            samples = "CAST(NULL AS ARRAY<STRING>)"
-        elif len(r[5]) == 0:
-            samples = "CAST(ARRAY() AS ARRAY<STRING>)"
-        else:
-            samples = "ARRAY(" + ",".join(_s(str(x)) for x in r[5]) + ")"
-        structs.append(
-            "named_struct("
-            f"'domain',{_s(r[0])},'variable',{_s(r[1])},"
-            f"'category',{_s(r[2])},'severity',{_s(r[3])},"
-            f"'count',{cnt},'samples',{samples})"
-        )
-    return spark.range(0, 1, 1, 1).select(
-        F.expr("inline(array(" + ",".join(structs) + "))")
-    )
 
 #: variable-name suffixes that must hold ISO-8601 partial-precision
 #: values (reference: validate/checks/dates.rs:28)

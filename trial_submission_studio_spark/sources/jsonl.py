@@ -60,11 +60,10 @@ from pyspark.sql.types import StringType, StructField, StructType
 CORRUPT_COL = "_corrupt_record"
 
 
-def _as_struct(spark: SparkSession, schema) -> StructType:
+def _as_struct(schema) -> StructType:
     if isinstance(schema, StructType):
         return schema
-    # DDL string → StructType via the session parser
-    return spark.createDataFrame([], schema).schema
+    return StructType.fromDDL(schema)
 
 
 def read_jsonl(
@@ -97,7 +96,7 @@ def read_jsonl(
     Blank/whitespace-only lines are dropped (trailing-newline
     artifacts, not corrupt data — mirroring the JSON datasource).
     """
-    struct = _as_struct(spark, schema)
+    struct = _as_struct(schema)
     if corrupt_col in struct.fieldNames():
         raise ValueError(
             f"schema must not already contain the quarantine column "
@@ -153,7 +152,7 @@ def read_jsonl_stream(
     `streaming/ingest.py`. ``max_files_per_trigger`` bounds
     micro-batch size for backfill over a large landing directory.
     """
-    struct = _as_struct(spark, schema)
+    struct = _as_struct(schema)
     if corrupt_col in struct.fieldNames():
         raise ValueError(
             f"schema must not already contain the quarantine column "

@@ -1,76 +1,104 @@
 """Small literal DataFrames without the Python-RDD path.
 
-``spark.createDataFrame(list_of_tuples)`` routes through
-``applySchemaToPythonRDD`` — the first use spawns Python worker
-processes (seconds of latency) and the lookup side of every broadcast
-join becomes an opaque ExistingRDD. For schema-sized lookup tables
-(codelists, reciprocal maps) a SQL ``VALUES`` relation keeps the
-whole thing JVM-side and lets Catalyst fold it into a
-LocalRelation.
+This module is the ONE place that renders Python values as SQL
+literal text. A list-built ``createDataFrame`` routes through
+``applySchemaToPythonRDD`` — every downstream action then schedules
+Python-worker tasks (~250 ms of protocol latency each) and the lookup
+side of every broadcast join becomes an opaque ExistingRDD. For
+driver-known tables (codelists, reciprocal maps, issue reports, gate
+rows) a SQL ``VALUES`` relation keeps the whole thing JVM-side:
+Catalyst folds it into a LocalRelation and ``collect`` runs no job.
+
+Literal rules (each value is rendered as its declared column type,
+so every row of a column carries exactly that type):
+
+- strings escape backslash, then quote, then ``$`` as ``\\u0024``.
+  Spark substitutes ``${...}`` variables (``spark.sql.variable.
+  substitute``, on by default) in the SQL TEXT before parsing, so a
+  raw ``$`` would let data such as ``${env:HOME}`` pull host values
+  into the frame; the parser decodes ``\\u0024`` after substitution.
+- doubles are ``CAST('<repr>' AS DOUBLE)`` (repr round-trips, the
+  cast is correctly rounded); NaN and ±Infinity are casts too.
+- NULLs carry their column type; identifiers are backtick-quoted.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
-def _sql_literal(v) -> str:
+def sql_string(s: str) -> str:
+    """A SQL string literal that parses back to exactly ``s``."""
+    esc = s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return f"'{esc}'"
+
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_literal(v, t: T.DataType) -> str:
     if v is None:
-        return "NULL"
-    if isinstance(v, bool):
+        return f"CAST(NULL AS {t.simpleString()})"
+    if isinstance(t, T.StringType):
+        return sql_string(str(v))
+    if isinstance(t, T.BooleanType):
         return "TRUE" if v else "FALSE"
-    if isinstance(v, float):
-        import math
+    if isinstance(t, T.IntegralType):
+        return f"CAST({int(v)} AS {t.simpleString()})"
+    if isinstance(t, (T.DoubleType, T.FloatType)):
+        # repr round-trips; 'nan', 'inf', '-inf' are cast spellings too
+        lit = f"CAST('{float(v)!r}' AS DOUBLE)"
+        # FLOAT narrows from the double, as Python's float would
+        return lit if isinstance(t, T.DoubleType) else f"CAST({lit} AS FLOAT)"
+    if isinstance(t, T.BinaryType):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(t, T.ArrayType):
+        items = ", ".join(_sql_literal(x, t.elementType) for x in v)
+        return f"CAST(array({items}) AS {t.simpleString()})"
+    # decimal, date, timestamp, ...: Spark casts the value's text
+    return f"CAST({sql_string(str(v))} AS {t.simpleString()})"
 
-        if math.isnan(v):
-            return "CAST('NaN' AS DOUBLE)"
-        if math.isinf(v):
-            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-        return repr(v)
-    if isinstance(v, int):
-        return repr(v)
-    if isinstance(v, bytes):
-        return f"X'{v.hex()}'"
-    if isinstance(v, (list, tuple)):
-        return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
-    s = str(v).replace("'", "''")
-    return f"'{s}'"
+
+@functools.lru_cache(maxsize=256)
+def _schema(ddl: str) -> T.StructType:
+    return T.StructType.fromDDL(ddl)
 
 
 def values_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """``schema``: 'name type, name type, ...' (Spark DDL).
+    """``schema``: Spark DDL, e.g. ``'name string, n bigint'``.
 
-    Builds ``SELECT ... FROM VALUES (...) AS t(cols)`` with literal
-    casts so types match the declared DDL exactly.
+    Builds ``SELECT * FROM VALUES (...) AS t(cols)`` with every value
+    rendered as its declared type (empty ``rows``: a typed zero-row
+    SELECT), so the frame's types match the DDL exactly.
     """
-    fields = [f.strip() for f in schema.split(",")]
-    names, types = zip(*(f.rsplit(" ", 1) for f in fields))
-    if not rows:
-        casts = ", ".join(
-            f"CAST(NULL AS {t}) AS {n}" for n, t in zip(names, types)
+    fields = _schema(schema).fields
+    names = ", ".join(_ident(f.name) for f in fields)
+    if rows:
+        value_rows = ", ".join(
+            "("
+            + ", ".join(
+                _sql_literal(v, f.dataType) for v, f in zip(row, fields, strict=True)
+            )
+            + ")"
+            for row in rows
         )
-        out = spark.sql(f"SELECT {casts} WHERE 1=0")
-        _attach_local_rows(out, [], names)
-        return out
-    value_rows = ", ".join(
-        "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
-    )
-    cols = ", ".join(
-        f"CAST({n} AS {t}) AS {n}" for n, t in zip(names, types)
-    )
-    out = spark.sql(
-        f"SELECT {cols} FROM (VALUES {value_rows}) AS t({', '.join(names)})"
-    )
-    _attach_local_rows(out, rows, names)
+        sql = f"SELECT * FROM VALUES {value_rows} AS t({names})"
+    else:
+        casts = ", ".join(
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS {_ident(f.name)}"
+            for f in fields
+        )
+        sql = f"SELECT {casts} WHERE FALSE"
+    out = spark.sql(sql)
+    # literal-row provenance: consumers that can compile a lookup into
+    # a constant expression (operators/ct_lookup.py) skip the per-use
+    # build job + BroadcastExchange. Best-effort: any transformation
+    # returns a new DataFrame without it, so every consumer keeps the
+    # frame-based path as the fallback.
+    out._tss_local_rows = [tuple(r) for r in rows]
+    out._tss_local_cols = tuple(f.name for f in fields)
     return out
-
-
-def _attach_local_rows(df: DataFrame, rows, names) -> None:
-    """Record the literal rows on the frame so consumers that can
-    compile a lookup into a constant expression (operators/
-    ct_lookup.py) skip the per-use build job + BroadcastExchange.
-    The attribute is best-effort provenance: any transformation
-    returns a new DataFrame without it, and every consumer must keep
-    the frame-based path as the fallback."""
-    df._tss_local_rows = [tuple(r) for r in rows]
-    df._tss_local_cols = tuple(names)

@@ -88,28 +88,25 @@ def codelist_lookup_df(spark: SparkSession, codelists: dict[str, Codelist]) -> D
     lookup_key is uppercased; submission value, synonyms, and the term
     code itself all resolve (reference: ct/types.rs:144-153).
     """
-    rows = []
+    # dedupe (codelist_code, lookup_key) here, first row wins: the
+    # constant-map path (operators/ct_lookup.py) and the join path
+    # then see the same rows, and the frame stays a bare VALUES
+    # relation that keeps its literal-row provenance
+    seen: dict[tuple[str, str], tuple] = {}
     for cl in codelists.values():
         for t in cl.terms:
             keys = {t.submission_value.upper(), t.code.upper()}
             keys.update(s.upper() for s in t.synonyms)
-            for k in keys:
+            for k in sorted(keys):
                 if k:
-                    rows.append((cl.code, k, t.submission_value, cl.extensible))
-    from trial_submission_studio_spark.sources.local import _attach_local_rows, values_df
+                    seen.setdefault((cl.code, k), (cl.code, k, t.submission_value, cl.extensible))
+    from trial_submission_studio_spark.sources.local import values_df
 
-    out = values_df(
+    return values_df(
         spark,
-        rows,
+        list(seen.values()),
         "codelist_code string, lookup_key string, submission_value string, extensible boolean",
-    ).dropDuplicates(["codelist_code", "lookup_key"])
-    # re-attach the literal rows (dropDuplicates returns a fresh frame):
-    # consumers that compile the lookup to a constant expression dedup
-    # on the normalized key themselves (operators/ct_lookup.py)
-    _attach_local_rows(
-        out, rows, ("codelist_code", "lookup_key", "submission_value", "extensible")
     )
-    return out
 
 
 #: catalog resolution priority (reference: ct/types.rs:377-394 — a

@@ -252,10 +252,14 @@ def validate_study(study: Study, frames: dict[str, DataFrame]) -> DataFrame:
     - J5 PARENT→REFID for RELSPEC
     - J6 melted-key record references for RELREC
     """
-    spark = study.spark
-    # JVM-only empty frame: createDataFrame([]) parallelizes and pays
-    # a Python-worker task per downstream action (see _issue_frame)
-    report = _issue_frame(spark, [])
+    # every check returns a literal issue frame (_issue_frame); their
+    # rows fold into ONE literal relation, which collects with no
+    # Spark job (a union of N literal relations runs one)
+    rows: list[tuple] = []
+
+    def add(frame: DataFrame) -> None:
+        rows.extend(frame._tss_local_rows)
+
     dm = frames.get("DM")
     submitted = list(frames)
     for code, df in frames.items():
@@ -272,32 +276,28 @@ def validate_study(study: Study, frames: dict[str, DataFrame]) -> DataFrame:
             for v in study.domains.get(code, [])
         ]
         if specs:
-            report = report.unionByName(validate_domain(df, code, specs))
+            add(validate_domain(df, code, specs))
         # base code: a split dataset's --SEQ keeps the parent prefix
         # (LBCC carries LBSEQ)
-        report = report.unionByName(
-            duplicate_sequence_issues(df, base_domain_code(code))
-        )
+        add(duplicate_sequence_issues(df, base_domain_code(code)))
         if dm is not None and upper != "DM" and "USUBJID" in df.columns:
-            report = report.unionByName(usubjid_not_in_dm(df, dm, code))
+            add(usubjid_not_in_dm(df, dm, code))
         if upper in ("CO", "RELREC") or upper.startswith("SUPP"):
-            report = report.unionByName(rdomain_invalid(df, code, submitted))
+            add(rdomain_invalid(df, code, submitted))
         if upper == "RELSUB":
             if dm is not None:
-                report = report.unionByName(rsubjid_not_in_dm(df, dm, code))
-            report = report.unionByName(relsub_not_bidirectional(df, code))
+                add(rsubjid_not_in_dm(df, dm, code))
+            add(relsub_not_bidirectional(df, code))
         if upper == "RELSPEC":
-            report = report.unionByName(relspec_invalid_parents(df, code))
+            add(relspec_invalid_parents(df, code))
         if upper == "RELREC":
             key_frames = {
                 c: f for c, f in frames.items()
                 if c.upper() not in ("RELREC", "RELSUB", "RELSPEC")
             }
             if key_frames:
-                report = report.unionByName(
-                    relrec_invalid_references(df, melt_domain_keys(key_frames), code)
-                )
-    return report
+                add(relrec_invalid_references(df, melt_domain_keys(key_frames), code))
+    return _issue_frame(study.spark, rows)
 
 
 def export_study(
@@ -314,7 +314,9 @@ def export_study(
     """
     os.makedirs(out_dir, exist_ok=True)
     report = validate_study(study, frames)
-    n_errors = report.filter(F.col("severity") == "Error").count()
+    # the report is a small literal relation: collecting it runs no
+    # Spark job, where count() would run two (shuffle + result)
+    n_errors = len(report.filter(F.col("severity") == "Error").collect())
     if n_errors and not bypass_validation:
         raise ValueError(f"validation reported {n_errors} error issue(s); export blocked")
 
