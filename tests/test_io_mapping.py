@@ -68,24 +68,55 @@ def test_write_xpt(spark, tmp_path):
 
 
 def test_write_dataset_xml(spark, tmp_path):
+    """The exact document: XML-escaped attribute values, SQL-special
+    text kept verbatim (quote, backslash, ``${...}`` is never
+    substituted), non-ASCII, and no ItemData for an empty, all-space
+    or NULL cell (P4)."""
     df = values_df(
         spark,
-        [("ST", "S-001", "Sun <stroke>", 1), ("ST", "S-002", "", 2)],
+        [
+            ("ST", "S-001", "Sun <stroke>", 1),
+            ("ST", "S-002", "", 2),
+            ("ST", "S-003", 'a & b < c > d "q"', 3),
+            ("it's", "back\\slash end\\", "${env:HOME}", 4),
+            ("ST", "Ünïcødé ✓ 日本", "   ", 5),
+            ("ST", None, " x ", 6),
+        ],
         "STUDYID string, USUBJID string, AETERM string, _row_id int",
     )
     path = str(tmp_path / "ae.xml")
     n = write_dataset_xml(df, path, "AE", "ST.STUDY", order_col="_row_id")
-    assert n == 2
+    assert n == 6
+
+    def group(seq, **items):
+        body = "".join(
+            f'    <ItemData ItemOID="IT.AE.{k}" Value="{v}"/>\n' for k, v in items.items()
+        )
+        return (
+            f'  <ItemGroupData ItemGroupOID="IG.AE" data:ItemGroupDataSeq="{seq}">\n'
+            f"{body}  </ItemGroupData>\n"
+        )
+
+    expected = (
+        '<?xml version="1.0" encoding="UTF-8"?>\n'
+        '<ODM xmlns="http://www.cdisc.org/ns/odm/v1.3" '
+        'xmlns:data="http://www.cdisc.org/ns/Dataset-XML/v1.0" '
+        'FileType="Snapshot" FileOID="ST.STUDY.AE" ODMVersion="1.3.2">\n'
+        ' <ClinicalData StudyOID="ST.STUDY" MetaDataVersionOID="MDV.1">\n'
+        + group(1, STUDYID="ST", USUBJID="S-001", AETERM="Sun &lt;stroke&gt;")
+        + group(2, STUDYID="ST", USUBJID="S-002")
+        + group(3, STUDYID="ST", USUBJID="S-003",
+                AETERM="a &amp; b &lt; c &gt; d &quot;q&quot;")
+        + group(4, STUDYID="it's", USUBJID="back\\slash end\\", AETERM="${env:HOME}")
+        + group(5, STUDYID="ST", USUBJID="Ünïcødé ✓ 日本")
+        + group(6, STUDYID="ST", AETERM=" x ")
+        + " </ClinicalData>\n</ODM>\n"
+    )
+    with open(path, encoding="utf-8") as fh:
+        assert fh.read() == expected
     doc = xml.dom.minidom.parse(path)  # well-formed
-    groups = doc.getElementsByTagName("ItemGroupData")
-    assert len(groups) == 2
-    assert groups[0].getAttribute("data:ItemGroupDataSeq") == "1"
-    items0 = groups[0].getElementsByTagName("ItemData")
-    vals = {i.getAttribute("ItemOID"): i.getAttribute("Value") for i in items0}
-    assert vals["IT.AE.AETERM"] == "Sun <stroke>"  # escaped+parsed back
-    # empty AETERM emits no ItemData (P4)
-    oids1 = [i.getAttribute("ItemOID") for i in groups[1].getElementsByTagName("ItemData")]
-    assert "IT.AE.AETERM" not in oids1
+    items = doc.getElementsByTagName("ItemGroupData")[2].getElementsByTagName("ItemData")
+    assert items[2].getAttribute("Value") == 'a & b < c > d "q"'
 
 
 def test_write_dataset_xml_sharded(spark, tmp_path):

@@ -168,7 +168,7 @@ def test_codelist_lookup_dedup_agrees_across_paths(spark):
     )
 
 
-def test_catalog_bucketed_snapshot_root_round_trips(spark, tmp_path, monkeypatch):
+def test_catalog_bucketed_snapshot_root_round_trips(spark, tmp_path):
     """``tss.snapshot_root`` goes through the shared quoter: a root
     holding ``${x}`` and a quote reads back verbatim, so the re-sync
     is recognised as a no-op."""
@@ -176,17 +176,10 @@ def test_catalog_bucketed_snapshot_root_round_trips(spark, tmp_path, monkeypatch
 
     from trial_submission_studio_spark.io import bucketed_table as bt
 
-    plain = str(tmp_path / "plain")
-    bt.publish_bucketed(
-        spark, spark.range(0, 20).selectExpr("id AS k", "id * 2 AS v"), plain, "k", 2
-    )
     root = str(tmp_path / "r${x}'s")
-    os.symlink(plain, root)
-    # Hadoop expands `{...}` globs in read paths, so Spark reads the
-    # data through the plain alias; the manifest and the recorded
-    # root still use the odd name
-    read = bt.read_bucketed_version
-    monkeypatch.setattr(bt, "read_bucketed_version", lambda s, r: read(s, plain))
+    bt.publish_bucketed(
+        spark, spark.range(0, 20).selectExpr("id AS k", "id * 2 AS v"), root, "k", 2
+    )
     table = f"snap_{uuid.uuid4().hex[:8]}"
     cat = str(tmp_path / "cat")
     assert bt.sync_catalog_bucketed(spark, root, table, path=cat)["refreshed"]
@@ -197,6 +190,27 @@ def test_catalog_bucketed_snapshot_root_round_trips(spark, tmp_path, monkeypatch
     assert props["tss.snapshot_root"] == os.path.abspath(root)
     assert not bt.sync_catalog_bucketed(spark, root, table, path=cat)["refreshed"]
     spark.sql(f"DROP TABLE {table}")
+
+
+def test_versioned_table_at_glob_named_root_round_trips(spark, tmp_path):
+    """A root whose name is Hadoop glob syntax reads back: the literal
+    file paths handed to ``spark.read`` are escaped, in
+    ``read_version`` and in the append's CHECK-constraint read."""
+    from trial_submission_studio_spark.io import versioned as ver
+
+    root = str(tmp_path / "r{x}[1]")
+    os.makedirs(root)
+
+    def run(lo, hi):
+        d = ver.new_data_dir(root)
+        spark.range(lo, hi).selectExpr("id AS k").write.parquet(d, mode="append")
+        return d
+
+    ver.publish_version(root, run(0, 5))
+    assert sorted(r.k for r in ver.read_version(spark, root).collect()) == list(range(5))
+    ver.set_table_constraints(spark, root, {"k_nonneg": "k >= 0"})
+    ver.publish_version(root, run(5, 8), base_version=ver.current_version(root), spark=spark)
+    assert sorted(r.k for r in ver.read_version(spark, root).collect()) == list(range(8))
 
 
 def test_rule_rejects_unknown_transform():

@@ -109,6 +109,34 @@ def test_full_study_flow(spark, study, tmp_path):
         export_study(study, {"DM": dm, "AE": ae}, str(tmp_path / "out2"))
 
 
+@pytest.mark.parametrize("fmt", ["xpt", "xml"])
+def test_bypassed_export_does_not_validate(spark, tmp_path, monkeypatch, fmt):
+    """With ``bypass_validation`` nothing can block the export, so the
+    study is not validated: every artifact is written even when
+    validation would fail."""
+    from trial_submission_studio_spark import study as study_api
+    from trial_submission_studio_spark.sources.local import values_df
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("validate_study ran")
+
+    monkeypatch.setattr(study_api, "validate_study", refuse)
+    st = study_api.Study(spark, "KIEM")
+    frames = {
+        code: values_df(
+            spark,
+            [("KIEM", code, "KIEM-01", "F")],
+            "STUDYID string, DOMAIN string, USUBJID string, SEX string",
+        )
+        for code in ("DM", "AE")
+    }
+    out = export_study(st, frames, str(tmp_path / "out"), fmt=fmt, bypass_validation=True)
+    assert set(out) == {"DM", "AE", "define"}
+    assert all(os.path.getsize(p) > 0 for p in out.values())
+    with pytest.raises(AssertionError, match="validate_study ran"):
+        export_study(st, frames, str(tmp_path / "out2"), fmt=fmt)
+
+
 # --- mockdata-shaped wide study: domains outside the original core ---
 
 WIDE_DM_CSV = (

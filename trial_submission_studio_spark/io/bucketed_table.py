@@ -321,14 +321,14 @@ def _point_lookup_plan(
     # int-keyed table must not see bigint-inferred scalars — F.hash
     # is dtype-sensitive, and the caller has no DataFrame to cast).
     # Literal VALUES relation: pure JVM, no Python-worker task.
-    from trial_submission_studio_spark.sources.local import values_df
+    from trial_submission_studio_spark.sources.local import ident, values_df
 
     probe_schema = spark.read.parquet(
         os.path.join(root, m["files"][0])
     ).schema
     key_type = probe_schema[key].dataType.simpleString()
     keys = values_df(
-        spark, [(v,) for v in values], f"`{key.replace('`', '``')}` {key_type}"
+        spark, [(v,) for v in values], f"{ident(key)} {key_type}"
     )
     mine = bucket_files(m, probe_bucket_ids(keys, spec))
     audit = {"files_total": len(m["files"]),

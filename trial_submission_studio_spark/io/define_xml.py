@@ -7,8 +7,9 @@ one ItemDef per variable; Char lengths come from the *observed* data
 OID.
 
 Spark-side: the only data-plane work is the per-column aggregate pass
-(max length + any-non-null), computed in ONE ``agg`` per domain;
-everything else is driver-side templating over schema-sized metadata.
+(max trimmed length, which also answers has-data), computed in ONE
+``agg`` per domain; everything else is driver-side templating over
+schema-sized metadata.
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ from dataclasses import dataclass, field
 from xml.sax.saxutils import quoteattr
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from trial_submission_studio_spark.operators.profiling import max_trimmed_lengths
 
 
 @dataclass
@@ -63,20 +65,13 @@ class DefineDataset:
 
 
 def observed_metadata(df: DataFrame, columns: list[str]) -> dict[str, tuple[int, bool]]:
-    """One pass: {column: (max_trimmed_length, has_data)}."""
-    aggs = []
-    for c in columns:
-        col = F.col(c).cast("string")
-        aggs.append(F.max(F.length(F.rtrim(col))).alias(f"{c}__len"))
-        aggs.append(
-            F.max(F.when(col.isNotNull() & (F.trim(col) != ""), 1).otherwise(0)).alias(
-                f"{c}__has"
-            )
-        )
-    row = df.agg(*aggs).collect()[0].asDict()
+    """One pass: {column: (max_trimmed_length, has_data)}.
+
+    ``has_data`` (a value that is not NULL and not all spaces) is exactly
+    "some value keeps a character after ``rtrim``", so both facts come
+    from the one max-trimmed-length aggregate per column."""
     return {
-        c: (max(int(row[f"{c}__len"] or 0), 1), bool(row[f"{c}__has"]))
-        for c in columns
+        c: (max(n, 1), n > 0) for c, n in max_trimmed_lengths(df, columns).items()
     }
 
 

@@ -61,6 +61,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 import time
 import uuid
@@ -70,6 +71,18 @@ from pyspark.sql import DataFrame, SparkSession
 _VERSIONS = "_versions"
 _CURRENT = "CURRENT"
 _CLONES = "_clones"
+
+
+#: characters Hadoop reads as glob syntax in a path (``\\`` escapes)
+_GLOB_META = re.compile(r"([\\{}\[\]*?])")
+
+
+def literal_path(path: str) -> str:
+    """``path`` with its glob metacharacters escaped. Spark hands every
+    read path holding one of ``{ } [ ] * ? \\`` to Hadoop as a glob,
+    so a file under a root named ``r{x}[1]`` would otherwise match
+    nothing (or other files)."""
+    return _GLOB_META.sub(r"\\\1", path)
 
 
 class ClonePinnedError(RuntimeError):
@@ -1259,7 +1272,7 @@ def commit_files(
         _enforce_constraints(
             spark,
             to_logical(
-                spark.read.parquet(*[os.path.join(root, f)
+                spark.read.parquet(*[literal_path(os.path.join(root, f))
                                      for f in add_files]),
                 base_raw,
             ),
@@ -1500,7 +1513,7 @@ def read_version(
         from .deletion_vectors import read_with_dv
 
         return read_with_dv(spark, root, m)
-    paths = [os.path.join(root, f) for f in m["files"]]
+    paths = [literal_path(os.path.join(root, f)) for f in m["files"]]
     fmt = "json" if paths[0].endswith((".jsonl", ".jsonl.gz", ".json.gz")) else "parquet"
     df = spark.read.format(fmt).load(paths)
     from .table_schema import column_mapping as _cmap, to_logical

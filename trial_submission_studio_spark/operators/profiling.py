@@ -1,4 +1,5 @@
-"""Column profiling aggregations (SURVEY.md §2.4 A1–A4, A9, A10).
+"""Column profiling aggregations (SURVEY.md §2.4 A1–A4; the A9
+has-data flag is ``io/define_xml.observed_metadata``).
 
 The reference computes per-column hints (null ratio, unique ratio,
 numeric ratio) and role-detection statistics with full-column scans
@@ -16,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from trial_submission_studio_spark.sources.local import ident, values_df
 
 
 def _nonblank(c: Column) -> Column:
@@ -63,8 +66,6 @@ def column_hints(df: DataFrame, columns: list[str] | None = None, exact: bool = 
         )
     # literal VALUES relation (sources/local.py): pure JVM — a list
     # createDataFrame pays a Python-worker task per downstream action
-    from trial_submission_studio_spark.sources.local import values_df
-
     return values_df(
         spark,
         out,
@@ -124,8 +125,6 @@ def numeric_profile(
                 [float(v) if v is not None else None for v in qs],
             )
         )
-    from trial_submission_studio_spark.sources.local import values_df
-
     return values_df(
         df.sparkSession,
         out,
@@ -147,20 +146,21 @@ def distinct_samples(df: DataFrame, column: str, n: int = 5) -> DataFrame:
     )
 
 
+def max_trimmed_lengths(df: DataFrame, columns: list[str]) -> dict[str, int]:
+    """Max ``length(rtrim(c))`` per column, 0 where no value has one.
+
+    One global aggregate; its value is ONE ``array(max(...), ...)`` SQL
+    expression, so the driver makes the same handful of py4j calls for
+    any number of columns (a Column-DSL aggregate costs several per
+    column)."""
+    aggs = ", ".join(
+        f"max(length(rtrim(CAST({ident(c)} AS STRING))))" for c in columns
+    )
+    maxima = df.agg(F.expr(f"array({aggs})")).collect()[0][0]
+    return {c: int(m or 0) for c, m in zip(columns, maxima, strict=True)}
+
+
 def max_observed_length(df: DataFrame, columns: list[str]) -> dict[str, int]:
     """A4: XPT/Define-XML Char length = max trimmed length, floor 1
     (reference: export/common.rs:83-119)."""
-    aggs = [
-        F.max(F.length(F.rtrim(F.col(c).cast("string")))).alias(c) for c in columns
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    return {c: max(int(row[c] or 0), 1) for c in columns}
-
-
-def has_collected_data(df: DataFrame, columns: list[str]) -> dict[str, bool]:
-    """A9: any non-blank value per column (Define-XML HasData flag)."""
-    aggs = [
-        F.max(F.when(_nonblank(F.col(c)), 1).otherwise(0)).alias(c) for c in columns
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    return {c: bool(row[c]) for c in columns}
+    return {c: max(n, 1) for c, n in max_trimmed_lengths(df, columns).items()}

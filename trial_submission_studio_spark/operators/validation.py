@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trial_submission_studio_spark.functions.datetime_iso import ISO_PARTIAL_RE
-from trial_submission_studio_spark.sources.local import values_df
+from trial_submission_studio_spark.sources.local import ident, values_df
 
 ISSUE_SCHEMA = T.StructType(
     [
@@ -104,7 +104,7 @@ def validate_domain(
         c = present.get(v.name.upper())
         if c is None:
             continue
-        col = f"`{c}`"
+        col = ident(c)
         sqls.append(
             f"sum(CASE WHEN {blank(col)} THEN 1 ELSE 0 END) AS `{v.name}__nulls`"
         )
@@ -128,7 +128,6 @@ def validate_domain(
                 f"sum(CASE WHEN {ln} > {int(v.length)} THEN 1 ELSE 0 END)"
                 f" AS `{v.name}__toolong`"
             )
-            sqls.append(f"max({ln}) AS `{v.name}__maxlen`")
 
     row = df.agg(*[F.expr(s) for s in sqls]).collect()[0].asDict()
     n = row["__n"]

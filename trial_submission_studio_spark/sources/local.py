@@ -1,7 +1,8 @@
 """Small literal DataFrames without the Python-RDD path.
 
-This module is the ONE place that renders Python values as SQL
-literal text. A list-built ``createDataFrame`` routes through
+This module is the ONE place that renders Python values and names as
+SQL text (``sql_string``, ``ident``; other modules build SQL strings
+from these two). A list-built ``createDataFrame`` routes through
 ``applySchemaToPythonRDD`` — every downstream action then schedules
 Python-worker tasks (~250 ms of protocol latency each) and the lookup
 side of every broadcast join becomes an opaque ExistingRDD. For
@@ -36,7 +37,8 @@ def sql_string(s: str) -> str:
     return f"'{esc}'"
 
 
-def _ident(name: str) -> str:
+def ident(name: str) -> str:
+    """A backtick-quoted SQL identifier that names exactly ``name``."""
     return "`" + name.replace("`", "``") + "`"
 
 
@@ -76,7 +78,7 @@ def values_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     SELECT), so the frame's types match the DDL exactly.
     """
     fields = _schema(schema).fields
-    names = ", ".join(_ident(f.name) for f in fields)
+    names = ", ".join(ident(f.name) for f in fields)
     if rows:
         value_rows = ", ".join(
             "("
@@ -89,7 +91,7 @@ def values_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
         sql = f"SELECT * FROM VALUES {value_rows} AS t({names})"
     else:
         casts = ", ".join(
-            f"CAST(NULL AS {f.dataType.simpleString()}) AS {_ident(f.name)}"
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS {ident(f.name)}"
             for f in fields
         )
         sql = f"SELECT {casts} WHERE FALSE"

@@ -9,7 +9,7 @@
    (tss-submit/src/normalize/preview.rs:144-171): infer rules, bind
    mappings, compile, execute.
 3. :func:`export_study` ≙ execute_export (tss-gui/src/service/
-   export.rs:127-276): validate (errors gate unless bypassed),
+   export.rs:127-276): validate (errors gate; skipped when bypassed),
    normalize every domain, build SUPP frames, write XPT or
    Dataset-XML plus define.xml.
 
@@ -309,16 +309,22 @@ def export_study(
 ) -> dict[str, str]:
     """Validate-gate then write every domain + define.xml.
 
-    Returns {artifact name: path}. Errors block export unless
-    ``bypass_validation`` (reference: export.rs:139-168).
+    Returns {artifact name: path}. Error issues block export with
+    ``ValueError`` (reference: export.rs:139-168). With
+    ``bypass_validation`` nothing can block it, so the study is not
+    validated at all: callers that want the report run
+    :func:`validate_study` themselves.
     """
     os.makedirs(out_dir, exist_ok=True)
-    report = validate_study(study, frames)
-    # the report is a small literal relation: collecting it runs no
-    # Spark job, where count() would run two (shuffle + result)
-    n_errors = len(report.filter(F.col("severity") == "Error").collect())
-    if n_errors and not bypass_validation:
-        raise ValueError(f"validation reported {n_errors} error issue(s); export blocked")
+    if not bypass_validation:
+        report = validate_study(study, frames)
+        # the report is a small literal relation: collecting it runs
+        # no Spark job, where count() would run two (shuffle + result)
+        n_errors = len(report.filter(F.col("severity") == "Error").collect())
+        if n_errors:
+            raise ValueError(
+                f"validation reported {n_errors} error issue(s); export blocked"
+            )
 
     written: dict[str, str] = {}
     define_datasets: list[DefineDataset] = []
